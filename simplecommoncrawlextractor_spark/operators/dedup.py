@@ -397,6 +397,31 @@ def _shingles_sized(
     return _arrow_shingles(docs, n, text_col, id_col, with_size=True)
 
 
+def _packed_binary(bounds, values, dtype: str):
+    """One Arrow BINARY cell per ``values[bounds[i]:bounds[i + 1]]`` slice,
+    packed as the explicit-byte-order ``dtype`` (``"<i8"`` / ``"<i4"``,
+    the order ``_binary_flat`` decodes, whatever the host's). The
+    column's byte offsets are int32, so a task whose payload would pass
+    2^31 - 1 bytes raises here instead of wrapping into corrupt pairs."""
+    import numpy as np
+    import pyarrow as pa
+
+    dt = np.dtype(dtype)
+    n_bytes = int(bounds[-1]) * dt.itemsize
+    if n_bytes > np.iinfo(np.int32).max:
+        raise OverflowError(
+            f"packed pair payload of {n_bytes} bytes overflows the int32 "
+            "byte offsets of one Arrow binary column; raise the partition "
+            "count or lower max_doc_freq"
+        )
+    offsets = (np.asarray(bounds, dtype=np.int64) * dt.itemsize).astype(np.int32)
+    data = np.ascontiguousarray(values, dtype=dt)
+    return pa.Array.from_buffers(
+        pa.binary(), len(bounds) - 1,
+        [None, pa.py_buffer(offsets), pa.py_buffer(data)],
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -518,6 +543,12 @@ def ngram_jaccard_pairs(
         cnt = np.concatenate(
             [np.arange(e - s - 1, -1, -1, dtype=np.int32) for s, e in zip(starts, ends)]
         )
+        n_pairs = int(cnt.sum(dtype=np.int64))
+        if n_pairs > np.iinfo(np.int32).max:
+            raise OverflowError(
+                f"{n_pairs} pair instances in one task overflow the int32 "
+                "pair indices; raise the partition count or lower max_doc_freq"
+            )
         a_idx = np.repeat(gidx, cnt)
         if not a_idx.size:
             return
@@ -555,17 +586,8 @@ def ngram_jaccard_pairs(
         rs = np.flatnonzero(np.r_[True, ca[1:] != ca[:-1]])
         bnd = np.concatenate([rs, [ca.size]])
         if int_ids:
-            ids_flat = np.ascontiguousarray(uid[cb].astype(np.int64, copy=False))
-            szs_flat = np.ascontiguousarray(sz_b)
-            nrows = rs.size
-            bb_ids = pa.Array.from_buffers(
-                pa.binary(), nrows,
-                [None, pa.py_buffer((bnd * 8).astype(np.int32)), pa.py_buffer(ids_flat)],
-            )
-            bb_szs = pa.Array.from_buffers(
-                pa.binary(), nrows,
-                [None, pa.py_buffer((bnd * 4).astype(np.int32)), pa.py_buffer(szs_flat)],
-            )
+            bb_ids = _packed_binary(bnd, uid[cb], "<i8")
+            bb_szs = _packed_binary(bnd, sz_b, "<i4")
             yield pa.record_batch(
                 [pa.array(uid[ca[rs]]), pa.array(sz_a[rs]), bb_ids, bb_szs],
                 names=["id_a", "sz_a", "b_ids", "b_szs"],

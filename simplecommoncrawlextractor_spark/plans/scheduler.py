@@ -139,11 +139,13 @@ class CrawlScheduler:
         """Constructor-supplied rules ∪ rules fetched during the crawl,
         MINUS the allow-all sentinel rows (null disallow, zero delay) —
         sentinels exist only so covered hosts aren't re-fetched; letting
-        them into the admission/budget joins would grow the broadcast side
-        by one row per host ever crawled. Rules stay one row per host THAT
-        PUBLISHES rules; at a scale where even that outgrows a broadcast,
-        switch robots_filter's join to a shuffle join (same semantics).
-        None when empty so the no-robots fast paths stay intact."""
+        them into the admission/budget plans would grow the broadcast
+        side by one entry per host ever crawled. Admission folds these
+        rows into one prefix array per host THAT PUBLISHES rules and
+        broadcasts that; at a scale where even that outgrows a broadcast,
+        drop the broadcast hint in robots_filter and the same left join
+        + ``exists`` runs as a shuffle join (same semantics). None when
+        empty so the no-robots fast paths stay intact."""
         stored = self._stored_robots().filter(
             F.col("disallow_prefix").isNotNull() | (F.col("crawl_delay") > 0)
         )
@@ -162,8 +164,15 @@ class CrawlScheduler:
         (one ``host`` column) covers hosts not yet IN the frontier — the
         streaming drain passes its batch's candidate hosts so their rules
         exist before admission. Returns the number of newly-covered
-        hosts."""
-        from .robots import bootstrap_robots
+        hosts.
+
+        The parse runs once: its per-host output (one row per fresh host,
+        see ``host_rules``) is cached and counted, and the robots append
+        explodes it from the cache. A host whose body yields no rules
+        becomes the allow-all sentinel row (null disallow, delay 0) in
+        that same explode, so it counts as covered and is never
+        re-fetched; robots_filter ignores null prefixes by construction."""
+        from .robots import fetch_robots_bodies, host_rules, rule_rows
 
         hosts = self.frontier().select("host")
         if extra_hosts is not None:
@@ -172,32 +181,20 @@ class CrawlScheduler:
         known = self._stored_robots().select("host")
         if self.robots_rules is not None:
             known = known.unionByName(self.robots_rules.select("host"))
-        fresh_hosts = hosts.join(known.distinct(), "host", "left_anti").cache()
-        parsed = bootstrap_robots(fresh_hosts)
-        # allow-all hosts yield no parsed rows — record a sentinel
-        # (null disallow, delay 0) so they count as covered and are never
-        # re-fetched; robots_filter ignores null prefixes by construction
-        sentinels = fresh_hosts.join(
-            parsed.select("host").distinct(), "host", "left_anti"
-        ).select(
-            "host",
-            F.lit(None).cast("string").alias("disallow_prefix"),
-            F.lit(0).alias("crawl_delay"),
-        )
-        new_rules = parsed.unionByName(sentinels).cache()
-        n_hosts = fresh_hosts.count()
+        fresh_hosts = hosts.join(known.distinct(), "host", "left_anti")
+        per_host = host_rules(fetch_robots_bodies(fresh_hosts)).cache()
+        n_hosts = per_host.count()
         if n_hosts:
             self.store.commit(
                 tables={},
-                appends={"robots": new_rules},
+                appends={"robots": rule_rows(per_host)},
                 carry_forward=[
                     "frontier", "frontier_tombs", "url_seen", "blooms",
                     "fetch_log", "metrics",
                 ],
                 meta={"round": self.round_no()},
             )
-        new_rules.unpersist()
-        fresh_hosts.unpersist()
+        per_host.unpersist()
         return n_hosts
 
     def _admit(
@@ -351,19 +348,24 @@ class CrawlScheduler:
         # rewritten — the StateStore upsert commit re-references their
         # existing files. At the 10^10 design point this is the difference
         # between ~12 GB of blob writes per round and a few MB.
-        # merge_delta is the backend facade: bloom ORs bits then rebuilds
-        # overfull buckets; cuckoo inserts in place and rebuilds buckets
-        # the batch would push past the load factor.
-        touched = newly_seen.select("bucket").distinct()
-        blooms_touched = blooms.join(F.broadcast(touched), "bucket", "left_semi")
+        # merge_delta is the backend facade: buckets the batch would push
+        # past capacity rebuild from the exact rows, the rest merge in
+        # place (bloom ORs bits, cuckoo inserts).
+        # The touched bucket ids are collected ONCE here (≤ n_buckets ids,
+        # the same bound _commit_upsert's key collect relies on) and
+        # applied as literal filters: static partition pruning of the
+        # bucket-partitioned blob table, instead of a dynamic-pruning
+        # subquery re-derived by every consumer of a broadcast join.
+        touched = sorted(
+            r[0] for r in newly_seen.select("bucket").distinct().collect()
+        )
+        is_touched = F.col("bucket").isin(touched)
         blooms_delta = self.seen.merge_delta(
-            blooms_touched, newly_seen.select("url_hash"), seen2
+            blooms.filter(is_touched), newly_seen.select("url_hash"), seen2
         ).cache()
         # full view for this round's probe = untouched ∪ delta (in-plan
         # union; nothing extra hits disk)
-        blooms2 = blooms.join(
-            F.broadcast(touched), "bucket", "left_anti"
-        ).unionByName(blooms_delta)
+        blooms2 = blooms.filter(~is_touched).unionByName(blooms_delta)
 
         # harvest next-round candidates, dedup vs (updated) seen set
         t1 = time.time()

@@ -196,9 +196,9 @@ class BloomSeenSet:
                 )
             row = bpdf.iloc[0]
             n_bits, n_items = int(row["n_bits"]), int(row["n_items"]) + len(hashes)
-            # growth is handled OUTSIDE this merge: rebuild_overfull_blooms
-            # re-derives oversubscribed buckets from the exact rows (the
-            # n_items bookkeeping below is what flags them)
+            # growth is handled OUTSIDE this merge: merge_delta routes a
+            # bucket this batch would oversubscribe (by the n_items
+            # bookkeeping below) to a rebuild from the exact rows instead
             bm = np.frombuffer(row["bitmap"], dtype=np.uint8).copy()
             if len(hashes):
                 pos = _probe_positions(hashes, n_bits, int(row["n_hashes"])).ravel()
@@ -260,11 +260,18 @@ class BloomSeenSet:
         self, touched_blobs: DataFrame, new_rows: DataFrame, seen_after: DataFrame
     ) -> DataFrame:
         """Per-round blob delta for the buckets receiving ``new_rows``:
-        OR the new hashes in, then rebuild any bucket whose item count
-        outran its bit budget (from ``seen_after``, the post-merge exact
-        rows). Only touched buckets can newly overflow."""
-        delta = self.merge_blooms(touched_blobs, new_rows)
-        return self.rebuild_overfull_blooms(delta, seen_after)
+        a bucket whose item count (stored rows + incoming rows, the
+        ``n_items`` bookkeeping merge_blooms keeps) would outrun its bit
+        budget rebuilds from ``seen_after`` (the post-merge exact rows) at
+        a larger size; every other bucket ORs the new hashes in. The
+        overfull set is decided BEFORE the merge and collected once on the
+        driver (shared skeleton: _merge_delta)."""
+        return _merge_delta(
+            self, touched_blobs, new_rows, seen_after,
+            incoming=F.count("*"),
+            overfull=lambda blob, items: items * BITS_PER_ITEM > blob["n_bits"],
+            merge=self.merge_blooms, build=self.build_blooms,
+        )
 
     def delete_delta(
         self, seen_rows: DataFrame, victims: DataFrame, blobs: DataFrame
@@ -800,6 +807,42 @@ def _suspects_probe(
     return candidates.join(truly_seen, "url_hash", "left_anti")
 
 
+def _merge_delta(
+    seen_set, touched_blobs: DataFrame, new_rows: DataFrame,
+    seen_after: DataFrame, incoming, overfull, merge, build,
+) -> DataFrame:
+    """Shared merge_delta skeleton for the bucket-blob seen sets. Which
+    buckets the batch would push past capacity is decided on the driver,
+    before the merge: ``overfull(blob, items)`` over a blob's metadata row
+    and its ``n_items`` plus the ``incoming`` aggregate of its new rows.
+    Both collects are bounded by n_buckets (the bound _commit_upsert's
+    key collect already relies on), and neither joins on the bucket
+    partition column, so no dynamic-pruning subquery is planned. The
+    overfull ids then apply as literal ``isin`` filters — static
+    partition pruning of the blob table and the exact rows. Overfull
+    buckets ``build`` from ``seen_after``; the rest ``merge`` the new
+    rows in place (a touched bucket without a blob builds from its new
+    rows inside ``merge`` and is never overfull)."""
+    rows = seen_set.bucketize(new_rows.select("url_hash"))
+    counts = dict(
+        rows.groupBy("bucket").agg(incoming.alias("incoming")).collect()
+    )
+    # metadata only: the binary blob column stays on the executors
+    meta = touched_blobs.select(
+        *[c for c, t in touched_blobs.dtypes if t != "binary"]
+    ).collect()
+    over = [
+        b["bucket"] for b in meta
+        if overfull(b, b["n_items"] + counts.get(b["bucket"], 0))
+    ]
+    is_over = F.col("bucket").isin(over)
+    rebuilt = build(seen_after.filter(is_over))
+    merged = merge(
+        touched_blobs.filter(~is_over), rows.filter(~is_over).select("url_hash")
+    )
+    return merged.unionByName(rebuilt)
+
+
 class CuckooSeenSet:
     """Partitioned cuckoo-filter URL-seen set — same outer shape as
     ``BloomSeenSet`` (one blob per partition bucket, applyInPandas
@@ -981,37 +1024,20 @@ class CuckooSeenSet:
     ) -> DataFrame:
         """Per-round blob delta: insert the new hashes in place for buckets
         with headroom; buckets the batch would push past the load factor
+        (stored items + incoming DISTINCT hashes, the way insert counts)
         rebuild at a larger capacity from ``seen_after`` (the post-merge
-        exact rows) — the cuckoo analog of rebuild_overfull_blooms, but
-        detected BEFORE insert (stored 16-bit fingerprints can't be
-        re-indexed at a different n_ck, so growth is always a rebuild).
-        The headroom predicate is the same expression ``insert`` raises
-        on, so the in-place path can never trip it."""
-        incoming = (
-            self.bucketize(new_rows)
-            .groupBy("bucket")
-            .agg(F.count_distinct("url_hash").alias("incoming"))
+        exact rows) — detected BEFORE insert, since stored 16-bit
+        fingerprints can't be re-indexed at a different n_ck, so growth is
+        always a rebuild. The headroom predicate is the same expression
+        ``insert`` raises on, so the in-place path can never trip it.
+        Shared skeleton with the bloom backend: _merge_delta."""
+        return _merge_delta(
+            self, touched_blobs, new_rows, seen_after,
+            incoming=F.count_distinct("url_hash"),
+            overfull=lambda blob, items: items
+            > blob["n_ck"] * _CK_SLOTS * _CK_LOAD,
+            merge=self.insert, build=self.build_filters,
         )
-        meta = incoming.join(
-            touched_blobs.select("bucket", "n_ck", "n_items"), "bucket", "left"
-        )
-        overfull = meta.filter(
-            F.col("n_ck").isNotNull()
-            & (
-                (F.col("n_items") + F.col("incoming"))
-                > F.col("n_ck") * F.lit(_CK_SLOTS) * F.lit(_CK_LOAD)
-            )
-        ).select("bucket")
-        rebuilt = self.build_filters(
-            seen_after.join(F.broadcast(overfull), "bucket", "left_semi")
-        )
-        ok_blobs = touched_blobs.join(F.broadcast(overfull), "bucket", "left_anti")
-        ok_rows = (
-            self.bucketize(new_rows)
-            .join(F.broadcast(overfull), "bucket", "left_anti")
-            .select("url_hash")
-        )
-        return self.insert(ok_blobs, ok_rows).unionByName(rebuilt)
 
     def delete_delta(
         self, seen_rows: DataFrame, victims: DataFrame, blobs: DataFrame

@@ -292,3 +292,38 @@ def test_star_cc_matches_label_propagation_and_handles_long_chain(spark):
         for r in connected_components_star(cand, docs.select("doc_id")).collect()
     }
     assert got == want
+
+
+def test_jaccard_integer_ids_match_string_ids(spark):
+    """Integer ids cross the pair exchange as packed little-endian binary
+    cells; the pairs must equal the string-id (Arrow list) path's."""
+    docs = _corpus(spark).filter(F.col("doc_id") < "d0060").cache()
+    by_str = {
+        (int(r["id_a"][1:]), int(r["id_b"][1:]), r["inter"])
+        for r in ngram_jaccard_pairs(docs, threshold=0.2, max_doc_freq=20).collect()
+    }
+    ints = docs.select(
+        F.substring("doc_id", 2, 4).cast("long").alias("doc_id"), "text"
+    )
+    by_int = {
+        (r["id_a"], r["id_b"], r["inter"])
+        for r in ngram_jaccard_pairs(ints, threshold=0.2, max_doc_freq=20).collect()
+    }
+    assert by_str and by_int == by_str
+
+
+def test_packed_binary_refuses_to_wrap_int32_offsets():
+    import numpy as np
+    import pytest
+
+    from simplecommoncrawlextractor_spark.operators.dedup import _packed_binary
+
+    small = _packed_binary(np.array([0, 2, 3]), np.array([1, -2, 3]), "<i8")
+    assert small.to_pylist() == [
+        np.array([1, -2], "<i8").tobytes(), np.array([3], "<i8").tobytes()
+    ]
+    # 2^28 eight-byte ids = 2^31 bytes, one past the int32 offset range; a
+    # zero-stride view, so the guard is hit without allocating the payload
+    huge = np.broadcast_to(np.int64(7), (2**28,))
+    with pytest.raises(OverflowError, match="int32"):
+        _packed_binary(np.array([0, 2**28]), huge, "<i8")
